@@ -58,9 +58,3 @@ def load(spark: SparkSession, name: str, base_dir: str | None = None) -> DataFra
     for c in ntz_cols:
         df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
-
-
-def register_all(spark: SparkSession, base_dir: str | None = None) -> None:
-    """Register every testdata table as a temp view for spark.sql()."""
-    for name in TABLES:
-        load(spark, name, base_dir).createOrReplaceTempView(name)

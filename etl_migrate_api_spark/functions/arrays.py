@@ -38,9 +38,3 @@ def slots_from_array(arr: Column) -> list[Column]:
 def array_to_slots_struct(arr: Column) -> Column:
     """Same projection as :func:`slots_from_array` but as a single struct."""
     return F.struct(*slots_from_array(arr))
-
-
-def slots_to_array(*cols: Column) -> Column:
-    """Inverse projection: 10 slot columns → array<string> with NULL slots
-    removed (canonical Spark shape, SURVEY.md §1)."""
-    return F.filter(F.array(*cols), lambda x: x.isNotNull())

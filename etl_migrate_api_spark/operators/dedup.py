@@ -16,10 +16,12 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_migrate_api_spark.functions.text import char_shingles, fingerprint
+from etl_migrate_api_spark.functions.text import fingerprint
 
 # PERF NOTE (measured 25× at sf0.1): an expression referenced inside a
 # higher-order-function lambda is RE-EVALUATED PER ARRAY ELEMENT — Spark
@@ -48,16 +50,27 @@ def _materialize_and_release(out: DataFrame, *caches: DataFrame) -> DataFrame:
     return out
 
 
+def num_partitions(df: DataFrame) -> int:
+    """Partition count of ``df``'s physical plan.
+
+    Probes the Java-side RDD first: same physical plan and count as
+    ``df.rdd``, but skips wrapping it in the Python pickle serializer —
+    measured 2x cheaper per call (0.06-0.09s vs 0.11-0.33s), and every
+    :func:`_spread` pays it once per operator. ``_jdf`` is a private
+    py4j surface (absent under Spark Connect), so any failure falls
+    back to the public ``df.rdd``."""
+    try:
+        return df._jdf.queryExecution().toRdd().getNumPartitions()
+    except Exception:
+        return df.rdd.getNumPartitions()
+
+
 def _spread_n(df: DataFrame) -> tuple[DataFrame, int]:
     """:func:`_spread` plus the resulting partition count, so callers
     can stack further shuffle-free ``coalesce(n)`` fences WITHOUT a
-    second ``df.rdd`` round-trip (each one re-plans the query on the
+    second partition probe (each one re-plans the query on the
     driver — measured ~0.1 s per call on the fence-heavy operators)."""
-    # partition-count probe via the Java-side RDD: same physical plan
-    # and count as df.rdd, but skips wrapping it in the Python pickle
-    # serializer — measured 2x cheaper per call (0.06-0.09s vs
-    # 0.11-0.33s), and every _spread pays it once per operator
-    n = df._jdf.queryExecution().toRdd().getNumPartitions()
+    n = num_partitions(df)
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     if n < parallelism:
         return df.repartition(parallelism), parallelism
@@ -237,7 +250,8 @@ def _prefix_filter_candidates(base: DataFrame, prefix_len, pair_filter=None) -> 
     ``base``: (id, blk, g array) — persisted by the caller.
     ``prefix_len``: size-Column → length-Column; the operator-specific
     lossless bound (|g|-ceil(t·|g|)+1 for Jaccard ≥ t, k·n+1 for edit
-    distance ≤ k). Returns distinct candidate pairs (id_a < id_b).
+    distance ≤ k). Returns candidate pairs (id_a < id_b), one row per
+    shared prefix token — the caller takes the distinct.
 
     ``pair_filter``: optional (sz_a, sz_b, pos_a, pos_b) → bool Column
     evaluated INSIDE the join on each shared prefix token (positions are
@@ -264,24 +278,15 @@ def _prefix_filter_candidates(base: DataFrame, prefix_len, pair_filter=None) -> 
         F.size("gs").alias("sz"),
         F.posexplode(F.slice("gs", 1, prefix_len(F.size("gs")))).alias("p", "gram"),
     )
-    a, b = pref.alias("a"), pref.alias("b")
-    cond = (
-        (F.col("a.blk") == F.col("b.blk"))
-        & (F.col("a.gram") == F.col("b.gram"))
-        & (F.col("a.id") < F.col("b.id"))
-    )
+    on_pair = None
     if pair_filter is not None:
-        cond = cond & pair_filter(
+        on_pair = pair_filter(
             F.col("a.sz"),
             F.col("b.sz"),
             F.col("a.p") + 1,  # posexplode is 0-based; filters want 1-based
             F.col("b.p") + 1,
         )
-    return (
-        a.join(b, cond)
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    return band_self_join_pairs(pref, ["blk", "gram"], on_pair)
 
 
 def fuzzy_match_pairs(
@@ -349,12 +354,9 @@ def fuzzy_match_pairs(
         )
     )
     cand = cand_long.unionByName(cand_short).distinct()
-    ta = base.select(F.col("id").alias("id_a"), F.col("t").alias("ta"))
-    tb = base.select(F.col("id").alias("id_b"), F.col("t").alias("tb"))
     dist = F.levenshtein(F.col("ta"), F.col("tb"))
     out = (
-        cand.join(ta, "id_a")
-        .join(tb, "id_b")
+        attach_pair_sides(cand, base, {"t": ("ta", "tb")})
         .select("id_a", "id_b", dist.cast("int").alias("dist"))
         .where(F.col("dist") <= max_edit)
     )
@@ -433,25 +435,61 @@ def connected_components(
     return labels
 
 
-def band_self_join_pairs(banded: DataFrame, idx_col: str, key_col: str) -> DataFrame:
-    """Candidate pairs (id_a < id_b) sharing a band: the ONE join shape
-    behind the whole LSH family (MinHash bands and SimHash chunks both
-    route through here). Kept as a named function so the skew-hardening
-    tests exercise the exact production join: a boilerplate-heavy corpus
-    makes one (idx, key) shuffle partition quadratically hot, and AQE
-    skew-join splitting (enabled in session.py) is the mitigation."""
+def band_self_join_pairs(
+    banded: DataFrame, keys: list[str], pair_filter: Column | None = None
+) -> DataFrame:
+    """Candidate pairs (id_a < id_b) of an ``id``-keyed band table that
+    agree on every column of ``keys``: the ONE join shape behind the
+    whole near-dup family (MinHash bands, 64-bit hash chunks, embedding
+    sign-bit bands, and the prefix-filter token joins all route through
+    here). Kept as a named function so the skew-hardening tests exercise
+    the exact production join: a boilerplate-heavy corpus makes one band
+    key's shuffle partition quadratically hot, and AQE skew-join
+    splitting (enabled in session.py) is the mitigation.
+
+    ``pair_filter``: optional extra join predicate over the two sides,
+    aliased ``a`` and ``b`` (e.g. ``F.col("a.sz") <= F.col("b.sz")``).
+
+    Returns one row per shared band key; callers take the distinct —
+    once, after unioning in any other candidate source (a distinct here
+    and another after the union would cost a second shuffle)."""
     a = banded.alias("a")
     b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col(f"a.{idx_col}") == F.col(f"b.{idx_col}"))
-            & (F.col(f"a.{key_col}") == F.col(f"b.{key_col}"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
+    cond = reduce(
+        lambda x, y: x & y, [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    ) & (F.col("a.id") < F.col("b.id"))
+    if pair_filter is not None:
+        cond = cond & pair_filter
+    return a.join(b, cond).select(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
     )
+
+
+def attach_pair_sides(
+    pairs: DataFrame,
+    side: DataFrame,
+    cols: dict[str, tuple[str, str]],
+    ids: tuple[str, str] = ("id_a", "id_b"),
+) -> DataFrame:
+    """The verify step's input: ``pairs`` joined twice to the ``id``-keyed
+    ``side`` table, once per pair column of ``ids``. Each entry
+    ``c: (name_a, name_b)`` of ``cols`` attaches ``side.c`` of the first
+    id as ``name_a`` and of the second id as ``name_b``."""
+    ia, ib = ids
+    sa = side.select(
+        F.col("id").alias(ia), *[F.col(c).alias(na) for c, (na, _) in cols.items()]
+    )
+    sb = side.select(
+        F.col("id").alias(ib), *[F.col(c).alias(nb) for c, (_, nb) in cols.items()]
+    )
+    return pairs.join(sa, ia).join(sb, ib)
+
+
+def _jaccard(a: str, b: str) -> Column:
+    """Exact set Jaccard of two array columns, named ``jaccard``."""
+    inter = F.size(F.array_intersect(a, b)).cast("double")
+    union = F.size(F.array_union(a, b)).cast("double")
+    return (inter / union).alias("jaccard")
 
 
 def minhash_signature_tables(
@@ -539,26 +577,11 @@ def minhash_lsh_candidates_incremental(
         )
     )
     # batch × batch candidates
-    within = (
-        nb.alias("a")
-        .join(
-            nb.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    )
+    within = band_self_join_pairs(nb, ["band_idx", "band_key"])
     pairs = cross.unionByName(within).distinct()
     sigs = corpus_signatures.unionByName(new_sigs)
-    sh_a = sigs.select(F.col("id").alias("id_a"), F.col("hv").alias("sh_a"))
-    sh_b = sigs.select(F.col("id").alias("id_b"), F.col("hv").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    out = (
-        pairs.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .select("id_a", "id_b", (inter / union).alias("jaccard"))
+    out = attach_pair_sides(pairs, sigs, {"hv": ("sh_a", "sh_b")}).select(
+        "id_a", "id_b", _jaccard("sh_a", "sh_b")
     )
     return _materialize_and_release(out, *owned)
 
@@ -600,15 +623,9 @@ def minhash_lsh_candidates(
             "band_idx", "band_key"
         ),
     ).persist()
-    pairs = band_self_join_pairs(banded, "band_idx", "band_key")
-    sh_a = base.select(F.col("id").alias("id_a"), F.col("hv").alias("sh_a"))
-    sh_b = base.select(F.col("id").alias("id_b"), F.col("hv").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    out = (
-        pairs.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .select("id_a", "id_b", (inter / union).alias("jaccard"))
+    pairs = band_self_join_pairs(banded, ["band_idx", "band_key"]).distinct()
+    out = attach_pair_sides(pairs, base, {"hv": ("sh_a", "sh_b")}).select(
+        "id_a", "id_b", _jaccard("sh_a", "sh_b")
     )
     return _materialize_and_release(out, base, banded)
 
@@ -695,29 +712,6 @@ aggregate(
 """
 
 
-def simhash_halves(tokens_hashed: str) -> tuple[Column, Column]:
-    """(lo, hi) bigint halves of the 64-bit simhash, as a single
-    expression pair over ``tokens_hashed`` (SQL expression for
-    array<string> of md5 hex digests of the doc's distinct tokens).
-
-    NOTE: each half re-evaluates the ones-count aggregate; callers on a
-    hot path should materialize the ones array once as an attribute
-    column instead (as :func:`simhash_df` does)."""
-    ones = _SIMHASH_ONES.format(hashes=_simhash_token_bits(tokens_hashed))
-    n = f"size({tokens_hashed})"
-    lo = F.expr(
-        f"aggregate(sequence(0, 31), cast(0 as bigint), (a, i) -> a + "
-        f"if(2 * element_at({ones}, i + 1) > {n}, "
-        f"shiftleft(cast(1 as bigint), i), cast(0 as bigint)))"
-    )
-    hi = F.expr(
-        f"aggregate(sequence(0, 31), cast(0 as bigint), (a, i) -> a + "
-        f"if(2 * element_at({ones}, i + 33) > {n}, "
-        f"shiftleft(cast(1 as bigint), i), cast(0 as bigint)))"
-    )
-    return lo, hi
-
-
 def simhash_df(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -762,11 +756,11 @@ def simhash_df(
 # IDENTICAL, so equality-blocking on chunks has guaranteed 100% recall —
 # this is the full-scale SimHash index layout, not a lossy approximation.
 SIMHASH_CHUNKS: list[tuple[str, int, int]] = [
-    # (half, start_bit_within_half, width)
-    ("simhash_lo", 0, 16),
-    ("simhash_lo", 16, 16),
-    ("simhash_hi", 0, 16),
-    ("simhash_hi", 16, 16),
+    # (half of an (id, lo, hi) signature table, start_bit_within_half, width)
+    ("lo", 0, 16),
+    ("lo", 16, 16),
+    ("hi", 0, 16),
+    ("hi", 16, 16),
 ]
 
 
@@ -811,36 +805,21 @@ def hamming64_pairs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
     exact ``bit_count(xor)`` verifies. The input should be cheap to
     recompute or persisted by the caller (read 3×: banding + both
     verify sides)."""
-    n_chunks = 4
-    if max_hamming >= n_chunks:
+    if max_hamming >= len(SIMHASH_CHUNKS):
         raise ValueError(
-            f"pigeonhole recall guarantee needs max_hamming < {n_chunks}"
+            f"pigeonhole recall guarantee needs max_hamming < {len(SIMHASH_CHUNKS)}"
         )
-    # generic (lo/hi, start, width) chunk layout — the simhash-specific
-    # column names live ONLY in simhash_neardup_pairs' aliasing
-    chunk_layout = [("lo", 0, 16), ("lo", 16, 16), ("hi", 0, 16), ("hi", 16, 16)]
     chunks = F.array(
         *[
             F.shiftright(F.col(half), start).bitwiseAND(F.lit((1 << width) - 1))
-            for half, start, width in chunk_layout
+            for half, start, width in SIMHASH_CHUNKS
         ]
     )
     banded = sigs.select("id", F.posexplode(chunks).alias("ci", "cv"))
-    cand = band_self_join_pairs(banded, "ci", "cv")
-    sa = sigs.select(
-        F.col("id").alias("id_a"),
-        F.col("lo").alias("lo_a"),
-        F.col("hi").alias("hi_a"),
-    )
-    sb = sigs.select(
-        F.col("id").alias("id_b"),
-        F.col("lo").alias("lo_b"),
-        F.col("hi").alias("hi_b"),
-    )
+    cand = band_self_join_pairs(banded, ["ci", "cv"]).distinct()
     ham = F.expr("bit_count(lo_a ^ lo_b) + bit_count(hi_a ^ hi_b)")
     return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
+        attach_pair_sides(cand, sigs, {"lo": ("lo_a", "lo_b"), "hi": ("hi_a", "hi_b")})
         .select("id_a", "id_b", ham.cast("int").alias("hamming"))
         .where(F.col("hamming") <= max_hamming)
     )
@@ -916,15 +895,10 @@ def ngram_jaccard_pairs(
         base,
         lambda sz: (sz - F.ceil(F.lit(threshold) * sz) + 1).cast("int"),
         pair_filter=_ppjoin_filter,
-    )
-    ga = base.select(F.col("id").alias("id_a"), F.col("g").alias("ga"))
-    gb = base.select(F.col("id").alias("id_b"), F.col("g").alias("gb"))
-    inter = F.size(F.array_intersect("ga", "gb")).cast("double")
-    union = F.size(F.array_union("ga", "gb")).cast("double")
+    ).distinct()
     out = (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .select("id_a", "id_b", (inter / union).alias("jaccard"))
+        attach_pair_sides(cand, base, {"g": ("ga", "gb")})
+        .select("id_a", "id_b", _jaccard("ga", "gb"))
         .where(F.col("jaccard") >= threshold)
     )
     return _materialize_and_release(out, base)

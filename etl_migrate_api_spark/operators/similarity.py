@@ -21,6 +21,11 @@ from etl_migrate_api_spark.operators._swap_retry import (
     read_optional_dir,
     with_swap_retry,
 )
+from etl_migrate_api_spark.operators.dedup import (
+    _materialize_and_release,
+    attach_pair_sides,
+    band_self_join_pairs,
+)
 
 
 def _rank_topk(scored: DataFrame, k: int, *tail_cols: Column) -> DataFrame:
@@ -241,12 +246,12 @@ def lsh_topk(
     bands = _band_explode(F.col("bits"), n_bands, band_size)
 
     def banded(df: DataFrame, idc: str, vc: str) -> DataFrame:
-        return (
-            df.select(F.col(id_col).alias(idc), F.col(vec_col).alias(vc))
-            .withColumn(
-                "bits", hyperplane_sign_bits(F.col(vc), n_bands * band_size, dim)
-            )
-            .select(idc, vc, bands.alias("band_idx", "band_key"))
+        return _embedding_bits(
+            df, None, id_col, vec_col, dim, n_bands * band_size
+        ).select(
+            F.col("id").alias(idc),
+            F.col("v").alias(vc),
+            bands.alias("band_idx", "band_key"),
         )
 
     c = banded(corpus, "neighbor_id", "cv")
@@ -670,6 +675,25 @@ def _band_explode(bits_col: Column, n_bands: int, band_size: int):
     )
 
 
+def _embedding_bits(
+    df: DataFrame,
+    block_col: str | None,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    n_bits: int,
+) -> DataFrame:
+    """(id, blk, v, bits): the hyperplane sign-bit base every banded
+    embedding operator explodes into (band_idx, band_key) with
+    :func:`_band_explode`; ``blk`` is the constant 1 without a
+    ``block_col``."""
+    return df.select(
+        F.col(id_col).alias("id"),
+        (F.col(block_col) if block_col else F.lit(1)).alias("blk"),
+        F.col(vec_col).alias("v"),
+    ).withColumn("bits", hyperplane_sign_bits(F.col("v"), n_bits, dim))
+
+
 def embedding_band_table(
     df: DataFrame,
     block_col: str | None = "label",
@@ -685,12 +709,7 @@ def embedding_band_table(
     :func:`embedding_neardup_incremental` against it — cost ∝ batch,
     not corpus. Deterministic hyperplane weights make the store
     append-only-safe (see hyperplane_weights)."""
-    bits = hyperplane_sign_bits(F.col("v"), n_bands * band_size, dim)
-    base = df.select(
-        F.col(id_col).alias("id"),
-        (F.col(block_col) if block_col else F.lit(1)).alias("blk"),
-        F.col(vec_col).alias("v"),
-    ).withColumn("bits", bits)
+    base = _embedding_bits(df, block_col, id_col, vec_col, dim, n_bands * band_size)
     return base.select(
         "id",
         "blk",
@@ -767,10 +786,7 @@ def embedding_neardup_incremental(
         )
         .where(F.col("sim") > threshold)
     )
-    out = out.persist()
-    out.count()
-    nb.unpersist()
-    return out
+    return _materialize_and_release(out, nb)
 
 
 def write_ivf_index(
@@ -989,40 +1005,18 @@ def embedding_neardup_pairs(
     ≈1.5% of borderline pairs (exact copies: 0%); the DuckDB oracle
     mirrors the banding exactly (same literal weights), so results stay
     engine-identical and deterministic."""
-    bits = hyperplane_sign_bits(F.col("v"), n_bands * band_size, dim)
-    base = (
-        df.select(
-            F.col(id_col).alias("id"),
-            (F.col(block_col) if block_col else F.lit(1)).alias("blk"),
-            F.col(vec_col).alias("v"),
-        )
-        .withColumn("bits", bits)
-        .persist()
-    )
+    base = _embedding_bits(
+        df, block_col, id_col, vec_col, dim, n_bands * band_size
+    ).persist()
     base.count()  # eager: the banded explode + two verify joins reuse it
     banded = base.select(
         "id",
         "blk",
         _band_explode(F.col("bits"), n_bands, band_size).alias("band_idx", "band_key"),
     )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    va = base.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
-    vb = base.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
+    cand = band_self_join_pairs(banded, ["blk", "band_idx", "band_key"]).distinct()
     out = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
+        attach_pair_sides(cand, base, {"v": ("va", "vb")})
         .select(
             "id_a",
             "id_b",
@@ -1030,10 +1024,7 @@ def embedding_neardup_pairs(
         )
         .where(F.col("sim") > threshold)
     )
-    out = out.persist()
-    out.count()
-    base.unpersist()
-    return out
+    return _materialize_and_release(out, base)
 
 
 def semdedup_drops(
@@ -2104,16 +2095,9 @@ def knn_graph_banded(
     buckets degrades (documentedly; NN-descent recovery in
     knn_graph_refine is the counterpart) but the pair count is bounded
     by n_bands·2^b·max_bucket²."""
-    bits = hyperplane_sign_bits(F.col("v"), n_bands * band_size, dim)
-    base = (
-        nodes.select(
-            F.col(id_col).alias("id"),
-            (F.col(block_col) if block_col else F.lit(1)).alias("blk"),
-            F.col(vec_col).alias("v"),
-        )
-        .withColumn("bits", bits)
-        .persist()
-    )
+    base = _embedding_bits(
+        nodes, block_col, id_col, vec_col, dim, n_bands * band_size
+    ).persist()
     base.count()  # eager: the band explode + two vector joins reuse it
     banded = base.select(
         "id",
@@ -2131,37 +2115,26 @@ def knn_graph_banded(
             .where(F.col("__r") <= max_bucket)
             .drop("__r")
         )
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") != F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("query_id"),
-            F.col("b.id").alias("neighbor_id"),
-        )
-        .distinct()
+    pairs = band_self_join_pairs(banded, ["blk", "band_idx", "band_key"]).distinct()
+    # both directions of every collision (disjoint, as id_a < id_b), so
+    # every node ranks its own candidates. One explode, not a union of
+    # the pairs with their swaps: the union plans the band join twice.
+    cand = pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("id_a").alias("query_id"), F.col("id_b").alias("neighbor_id")),
+                F.struct(F.col("id_b").alias("query_id"), F.col("id_a").alias("neighbor_id")),
+            )
+        ).alias("e")
+    ).select("e.query_id", "e.neighbor_id")
+    scored = attach_pair_sides(
+        cand, base, {"v": ("qv", "nv")}, ids=("query_id", "neighbor_id")
+    ).select(
+        "query_id",
+        "neighbor_id",
+        cosine_similarity(F.col("qv"), F.col("nv")).alias("sim"),
     )
-    vq = base.select(F.col("id").alias("query_id"), F.col("v").alias("qv"))
-    vn = base.select(F.col("id").alias("neighbor_id"), F.col("v").alias("nv"))
-    scored = (
-        cand.join(vq, "query_id")
-        .join(vn, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_similarity(F.col("qv"), F.col("nv")).alias("sim"),
-        )
-    )
-    out = _rank_topk(scored, k)
-    out = out.persist()
-    out.count()
-    base.unpersist()
-    return out
+    return _materialize_and_release(_rank_topk(scored, k), base)
 
 
 def knn_graph_refine(
@@ -2206,22 +2179,12 @@ def knn_graph_refine(
             .where(F.col("query_id") != F.col("neighbor_id"))
             .distinct()
         )
-        scored = (
-            cand.join(
-                v.select(F.col("id").alias("query_id"), F.col("v").alias("qv")),
-                "query_id",
-            )
-            .join(
-                v.select(
-                    F.col("id").alias("neighbor_id"), F.col("v").alias("nv")
-                ),
-                "neighbor_id",
-            )
-            .select(
-                "query_id",
-                "neighbor_id",
-                cosine_similarity(F.col("qv"), F.col("nv")).alias("sim"),
-            )
+        scored = attach_pair_sides(
+            cand, v, {"v": ("qv", "nv")}, ids=("query_id", "neighbor_id")
+        ).select(
+            "query_id",
+            "neighbor_id",
+            cosine_similarity(F.col("qv"), F.col("nv")).alias("sim"),
         )
         ranked = _rank_topk(scored, k)
         ranked = ranked.persist()

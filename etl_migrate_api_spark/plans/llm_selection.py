@@ -1595,6 +1595,8 @@ def bpe_merge_table(
     merges on a synthetic Zipf vocab; tools/bench_bpe.py A/Bs the two
     trainers at large vocab).
     """
+    from etl_migrate_api_spark.operators.dedup import num_partitions
+
     if words.where(F.col("word").contains(_BPE_SEP)).limit(1).count():
         raise ValueError(
             "bpe_merge_table: input words must not contain the \\x1f "
@@ -1615,7 +1617,7 @@ def bpe_merge_table(
     # partitions, so without the coalesce the partition count follows
     # p' = 2p + k — exponential task-count growth (measured: ~2× per
     # step until iterations took 30 s on 182 rows)
-    n_parts = max(1, base._jdf.queryExecution().toRdd().getNumPartitions())
+    n_parts = max(1, num_partitions(base))
     pairs = _bpe_pair_counts(base).localCheckpoint(eager=True)
     overrides = None  # (word, cnt, syms) rewritten since last compaction
     merges: list[tuple[int, str, str, str, int]] = []

@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the etl_migrate_api_spark package
+CHECKOUT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Confs the engine's results depend on — all runtime-settable, so they
 # can be applied defensively to a session we did not build (the round
@@ -107,6 +109,11 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # --- keep UI off in the harness; a real deployment re-enables it ---
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        # --- Python workers unpickle UDF / mapInPandas functions by module
+        #     reference (e.g. plans/stats_ops.py::_mg_partials), so they
+        #     must import this package whatever the driver's cwd; Spark
+        #     merges this path with the workers' own PYTHONPATH ---
+        .config("spark.executorEnv.PYTHONPATH", CHECKOUT_ROOT)
     )
     aqe_min = os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION")
     if aqe_min:

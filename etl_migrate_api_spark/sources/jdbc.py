@@ -14,7 +14,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 from typing import Any
 
-from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql import DataFrame
 
 
 def partitioned_jdbc_options(
@@ -41,11 +41,6 @@ def partitioned_jdbc_options(
     }
     opts.update(properties or {})
     return opts
-
-
-def partitioned_jdbc_read(spark: SparkSession, **kwargs) -> DataFrameReader:
-    """Configured reader (caller invokes ``.load()`` where a DB exists)."""
-    return spark.read.format("jdbc").options(**partitioned_jdbc_options(**kwargs))
 
 
 def jdbc_append_options(batch_size: int = 1000, isolation: str = "READ_COMMITTED") -> dict[str, str]:

@@ -192,3 +192,67 @@ def test_storm_probe_straddle_classification_is_phase_based():
     )
     assert len(straddles) == 12
     assert surfaced == ["action straddle did not converge"]
+
+
+def test_num_partitions_falls_back_to_public_rdd(spark):
+    """ADVICE r16: the partition probe behind _spread and the BPE trainer
+    read the private ``df._jdf`` py4j surface with no fallback, which
+    Spark Connect DataFrames do not have. ``num_partitions`` must agree
+    with the public ``df.rdd`` on a real DataFrame and fall back to it
+    when ``_jdf`` is missing."""
+    from types import SimpleNamespace
+
+    from etl_migrate_api_spark.operators.dedup import num_partitions
+
+    df = spark.range(0, 100, 1, 3)
+    assert num_partitions(df) == df.rdd.getNumPartitions() == 3
+    # no _jdf attribute at all, as on a Spark Connect DataFrame
+    connect_like = SimpleNamespace(rdd=df.rdd)
+    assert num_partitions(connect_like) == 3
+
+
+def test_python_workers_get_the_checkout_on_their_path(spark):
+    """A run started outside the checkout (``cd /tmp && python
+    <checkout>/bench.py ...``) failed in the Python workers with
+    ModuleNotFoundError: mapInPandas pickles module-level functions by
+    reference, and the workers could not import the engine. get_spark
+    puts the checkout root on the workers' PYTHONPATH."""
+    import os
+
+    from etl_migrate_api_spark.session import CHECKOUT_ROOT
+
+    worker_path = (
+        spark.sparkContext.parallelize([0], 1)
+        .map(lambda _: __import__("os").environ.get("PYTHONPATH", ""))
+        .collect()[0]
+    )
+    assert CHECKOUT_ROOT in worker_path.split(os.pathsep), worker_path
+
+
+def test_dump_plans_rejects_bad_calls():
+    """ADVICE r16: the per-round dump scripts indexed argv blindly — a
+    bare call raised IndexError and a typo'd tag wrote misnamed
+    evidence files. tools/dump_plans.py validates and prints usage."""
+    import os
+    import subprocess
+    import sys
+
+    tools_dir = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", "tools"))
+    sys.path.insert(0, tools_dir)
+    from dump_plans import parse_args
+
+    known = ["q1", "q3"]
+    assert parse_args(["r17", "before"], known) == ("r17", "before", known)
+    assert parse_args(["r17", "after", "q3"], known) == ("r17", "after", ["q3"])
+    for bad in ([], ["r17"], ["17", "before"], ["r17", "later"], ["r17", "after", "q9"]):
+        with pytest.raises(ValueError):
+            parse_args(bad, known)
+    # the script itself: exit 2 and the usage line, before any JVM starts
+    proc = subprocess.run(
+        [sys.executable, os.path.join(tools_dir, "dump_plans.py"), "r17"],
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 2
+    assert "usage: python3 tools/dump_plans.py <round> <before|after>" in proc.stderr

@@ -10,14 +10,16 @@ These tests plant that skew, shrink the AQE size thresholds to
 test-data scale (the *mechanism* is scale-invariant; only the byte
 thresholds differ from production), execute the exact production join
 (:func:`operators.dedup.band_self_join_pairs` — the one join shape
-behind both MinHash-LSH and SimHash), and assert on the FINAL adaptive
-plan that the hot partition was actually split
-(``SortMergeJoin(skew=true)``) — plus that the split changed no
-results.
+behind the whole near-dup family: MinHash-LSH bands, 64-bit hash chunks
+(SimHash, pHash), embedding sign-bit bands and the prefix-filter token
+joins), and assert on the FINAL adaptive plan that the hot partition
+was actually split (``SortMergeJoin(skew=true)``) — plus that the split
+changed no results.
 """
 
 from __future__ import annotations
 
+import random
 from contextlib import contextmanager
 
 import pyspark.sql.functions as F
@@ -34,6 +36,7 @@ from etl_migrate_api_spark.operators.dedup import (
     shingle_hashes,
     simhash_df,
 )
+from etl_migrate_api_spark.operators.similarity import embedding_band_table
 
 N_DOCS = 4000
 HOT_IDS = frozenset(range(0, N_DOCS, 5))  # 20% boilerplate
@@ -106,7 +109,9 @@ def _minhash_banded(df):
 
 
 def _simhash_banded(df):
-    s = simhash_df(df, "text", "doc_id")
+    s = simhash_df(df, "text", "doc_id").select(
+        "id", F.col("simhash_lo").alias("lo"), F.col("simhash_hi").alias("hi")
+    )
     chunks = F.array(
         *[
             F.shiftright(F.col(half), start).bitwiseAND(F.lit((1 << width) - 1))
@@ -116,8 +121,24 @@ def _simhash_banded(df):
     return s.select("id", F.posexplode(chunks).alias("ci", "cv"))
 
 
-def _assert_skew_split(spark, banded, idx_col, key_col):
-    pairs = band_self_join_pairs(banded, idx_col, key_col)
+def _embedding_banded(spark):
+    """Embedding sign-bit bands: every boilerplate doc embeds to the same
+    vector (one source label), so it lands one identical key per band.
+    2 bands x 16 planes keep the cold vectors spread over 2^16 keys."""
+    rng = random.Random(7)
+    hot_vec = [rng.uniform(-1, 1) for _ in range(64)]
+    rows = [
+        (i, 0, hot_vec)
+        if i in HOT_IDS
+        else (i, i % 4, [rng.uniform(-1, 1) for _ in range(64)])
+        for i in range(N_DOCS)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, label int, embedding array<double>")
+    return embedding_band_table(emb, n_bands=2, band_size=16)
+
+
+def _assert_skew_split(spark, banded, keys):
+    pairs = band_self_join_pairs(banded, keys).distinct()
     with _aqe_skew_at_test_scale(spark):
         # collect() executes THIS DataFrame's own query execution — the
         # only way the executedPlan below is the finalized adaptive plan
@@ -138,8 +159,12 @@ def _assert_skew_split(spark, banded, idx_col, key_col):
 
 
 def test_minhash_band_join_splits_hot_band(spark, skewed_corpus):
-    _assert_skew_split(spark, _minhash_banded(skewed_corpus), "band_idx", "band_key")
+    _assert_skew_split(spark, _minhash_banded(skewed_corpus), ["band_idx", "band_key"])
 
 
 def test_simhash_chunk_join_splits_hot_chunk(spark, skewed_corpus):
-    _assert_skew_split(spark, _simhash_banded(skewed_corpus), "ci", "cv")
+    _assert_skew_split(spark, _simhash_banded(skewed_corpus), ["ci", "cv"])
+
+
+def test_embedding_band_join_splits_hot_band(spark):
+    _assert_skew_split(spark, _embedding_banded(spark), ["blk", "band_idx", "band_key"])

@@ -42,6 +42,30 @@ def _norm_statistics(plan: str) -> str:
         i = k
 
 
+def formatted_plan(spark, df) -> str:
+    """``df``'s formatted physical plan with session-volatile ids and
+    runtime statistics normalized, so regenerations (and before/after
+    dumps, tools/dump_plans.py) diff cleanly."""
+    plan = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+    plan = re.sub(r"#\d+", "#N", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    plan = re.sub(r"codegen id : \d+", "codegen id : N", plan)
+    plan = re.sub(r"cachedrdd-\d+", "cachedrdd-N", plan)
+    plan = re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
+    # DataFrame-API lambda variables carry a session-wide counter, and
+    # AQE numbers its query stages in the order they happen to start
+    plan = re.sub(r"(lambda \w+?)_\d+#", r"\1_N#", plan)
+    plan = re.sub(r"(QueryStage\n(?:[^\n]+\n)*?Arguments: )\d+", r"\1N", plan)
+    # pid-tagged scratch dirs (tmputil) and AQE runtime statistics
+    # both vary per process/run — normalize or regens churn
+    plan = re.sub(r"_pid\d+", "_pidN", plan)
+    return _norm_statistics(plan)
+
+
 HEADER = """# PLANS — physical plans of the headline queries (auto-generated)
 
 `python3 tools/gen_plans.py` at {sf}. What to look for, per the design
@@ -64,21 +88,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     out = [HEADER.format(sf=sf)]
     for name in headline_names():
-        df = QUERIES[name].fn(spark, sf)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        # normalize session-volatile ids so regeneration is diff-stable
-        plan = re.sub(r"#\d+", "#N", plan)
-        plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
-        plan = re.sub(r"codegen id : \d+", "codegen id : N", plan)
-        plan = re.sub(r"cachedrdd-\d+", "cachedrdd-N", plan)
-        # pid-tagged scratch dirs (tmputil) and AQE runtime statistics
-        # both vary per process/run — normalize or regens churn
-        plan = re.sub(r"_pid\d+", "_pidN", plan)
-        plan = _norm_statistics(plan)
+        plan = formatted_plan(spark, QUERIES[name].fn(spark, sf))
         out.append(f"\n## {name}\n\n```\n{plan.rstrip()}\n```\n")
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write("".join(out))
