@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_migrate_api_spark.functions.text import extract_phones
+from etl_migrate_api_spark.localdf import local_df
 from etl_migrate_api_spark.operators.classify import classify_batch
 from etl_migrate_api_spark.operators.merge import merge_fold_expr
 from etl_migrate_api_spark.sinks.tables import HashBucketedTable, ParquetTable
@@ -70,8 +71,12 @@ class ContactEtlJob:
         # sink + state are key-hash-bucketed so each micro-batch rewrites
         # only the buckets containing its keys (Delta-replaceWhere
         # semantics on plain files — reference saveToPostgres.js:315-409
-        # touches only the batch's rows). At 100 TB raise n_buckets so a
-        # bucket stays a few GB. The audit log is append-only → plain.
+        # touches only the batch's rows). At 16 buckets that prunes
+        # nothing: a 1,000-key page has keys in all 16, so every page
+        # rewrites the whole sink and state (32 bucket rewrites); pruning
+        # pays only once n_buckets far exceeds the keys per page. At
+        # 100 TB raise n_buckets so a bucket stays a few GB. The audit
+        # log is append-only → plain.
         # track_max("recid"): every sink write bumps a footer-stats upper
         # bound on max(recid), so the per-batch X2 recovery delete can
         # prove "no rows beyond the watermark" without scanning the table
@@ -140,7 +145,7 @@ class ContactEtlJob:
             "started_at": kw.get("started_at"),
             "finished_at": kw.get("finished_at"),
         }
-        self.log.append(self.spark.createDataFrame([row], schema=LOG_SCHEMA))
+        self.log.append(local_df(self.spark, [row], LOG_SCHEMA))
 
     # ---- one micro-batch -------------------------------------------------
     def process_batch(self, batch: DataFrame, last_id: int, batch_no: int) -> JobResult:
@@ -242,9 +247,7 @@ class ContactEtlJob:
         from etl_migrate_api_spark.operators.merge import state_from_legacy
 
         if not self.sink.exists():
-            self.state.replace(
-                self.spark.createDataFrame([], schema=STATE_SCHEMA)
-            )
+            self.state.replace(local_df(self.spark, [], STATE_SCHEMA))
             return 0
         state = state_from_legacy(self.sink.read()).select(
             "hn_code", "slots", "extras"

@@ -9,11 +9,16 @@ shuffle partitions sized for the local harness but overridable via env.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 # the directory holding the etl_migrate_api_spark package
 CHECKOUT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Spark's byte-size string (JavaUtils.byteStringAsBytes): digits, then an
+# optional unit; a bare number is bytes
+_BYTE_SIZE = re.compile(r"[0-9]+(b|kb?|mb?|gb?|tb?|pb?)?")
 
 # Confs the engine's results depend on — all runtime-settable, so they
 # can be applied defensively to a session we did not build (the round
@@ -61,6 +66,14 @@ def get_spark(
     caller passes ``master=None`` and lets spark-submit own it; all confs
     below remain valid at any scale.
     """
+    aqe_min = os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION")
+    if aqe_min and not _BYTE_SIZE.fullmatch(aqe_min.strip().lower()):
+        # Spark parses the value only when a query reads it, far from
+        # the setting; fail before any session is built
+        raise ValueError(
+            f"SPARK_GRAFT_AQE_MIN_PARTITION={aqe_min!r} is not a byte size "
+            "(e.g. 65536, 64k, 1m)"
+        )
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
@@ -115,7 +128,6 @@ def get_spark(
         #     merges this path with the workers' own PYTHONPATH ---
         .config("spark.executorEnv.PYTHONPATH", CHECKOUT_ROOT)
     )
-    aqe_min = os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION")
     if aqe_min:
         builder = builder.config(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize", aqe_min

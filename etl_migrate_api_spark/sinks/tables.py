@@ -30,6 +30,8 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_migrate_api_spark.localdf import local_df
+
 
 def _footer_max(dirpath: str, cols: tuple[str, ...]) -> dict[str, object]:
     """Per-column max over every parquet file under ``dirpath``, read
@@ -239,7 +241,7 @@ class ParquetTable:
     def read_or_empty(self, schema) -> DataFrame:
         if self.exists():
             return self.read()
-        return self.spark.createDataFrame([], schema=schema)
+        return local_df(self.spark, [], schema)
 
     def _append_bump(self, df: DataFrame) -> DataFrame:
         """Bound maintenance for append paths: snapshot the batch
@@ -329,8 +331,14 @@ class HashBucketedTable(ParquetTable):
     ``_bucket = pmod(xxhash64(key), n_buckets)``. ``replace_buckets``
     rewrites ONLY the bucket directories named — untouched buckets'
     files are not read, not rewritten, not even listed by the write.
-    At 100 TB, size ``n_buckets`` so a bucket ≈ a few GB (e.g. 4096);
-    a micro-batch then rewrites ~|batch keys| buckets, not the table.
+    Every write leaves one file per bucket directory it writes.
+
+    A batch rewrites every bucket one of its keys hashes to, so pruning
+    only pays when a batch's keys cover few buckets: a 1,000-key batch
+    over 16 buckets touches all 16 and rewrites the whole table. At
+    100 TB, size ``n_buckets`` so a bucket ≈ a few GB (e.g. 4096); a
+    micro-batch then rewrites at most |batch keys| buckets, not the
+    table.
     On Delta/Iceberg the same call site becomes
     ``MERGE INTO``/``replaceWhere`` — semantics identical.
     """
@@ -400,9 +408,9 @@ class HashBucketedTable(ParquetTable):
         self._recover()  # same stranded-snapshot hazard as the base append
         if self.track_max:
             df = self._append_bump(df)
-        df.withColumn(self.BUCKET_COL, self.bucket_expr()).write.mode(
-            "append"
-        ).partitionBy(self.BUCKET_COL).parquet(self.path)
+        self._by_bucket(df).write.mode("append").partitionBy(self.BUCKET_COL).parquet(
+            self.path
+        )
 
     def read_buckets(self, buckets: list[int]) -> DataFrame:
         """Partition-pruned read: only the named bucket directories are
@@ -423,10 +431,17 @@ class HashBucketedTable(ParquetTable):
             for r in df.select(self.bucket_expr().alias("b")).distinct().collect()
         ]
 
+    def _by_bucket(self, df: DataFrame) -> DataFrame:
+        """``df`` with its bucket column, hash-partitioned on it so each
+        bucket's rows land in one write task: one file per bucket
+        directory per write. Without the repartition every write task
+        puts a file in every bucket it holds rows of."""
+        return df.withColumn(self.BUCKET_COL, self.bucket_expr()).repartition(
+            self.BUCKET_COL
+        )
+
     def _write(self, df: DataFrame, path: str) -> None:
-        df.withColumn(self.BUCKET_COL, self.bucket_expr()).write.mode(
-            "overwrite"
-        ).partitionBy(self.BUCKET_COL).parquet(path)
+        self._by_bucket(df).write.mode("overwrite").partitionBy(self.BUCKET_COL).parquet(path)
         if self.track_max:
             self._write_bounds(path, _footer_max(path, self.track_max))
 

@@ -26,9 +26,12 @@ def upsert_by_key(table: ParquetTable, batch: DataFrame, key: str) -> None:
 
     On a ``HashBucketedTable`` this is partition-pruned: only the key
     buckets present in the batch are read (anti-join side) and
-    rewritten — per-batch cost ∝ batch's buckets, not table size. On a
-    plain ``ParquetTable`` it falls back to whole-table replace (the
-    documented harness stand-in for Delta MERGE / JDBC staging+MERGE)."""
+    rewritten — per-batch cost ∝ batch's buckets, not table size. When
+    the batch has more keys than the table has buckets, that is usually
+    every bucket (a 1,000-key batch over 16 buckets rewrites all 16).
+    On a plain ``ParquetTable`` it falls back to whole-table replace
+    (the documented harness stand-in for Delta MERGE / JDBC
+    staging+MERGE)."""
     if not table.exists():
         table.replace(batch)
         return

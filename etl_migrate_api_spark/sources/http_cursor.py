@@ -19,6 +19,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from etl_migrate_api_spark.localdf import local_df
+
 # fetch(last_id, limit) -> {"data": [row, ...], "count": int}
 FetchFn = Callable[[int, int], dict[str, Any]]
 
@@ -59,7 +61,7 @@ class CursorSource:
                 return
             # arrival order is the cursor order; make it explicit (O4:
             # Spark has no implicit row order)
-            df = self.spark.createDataFrame(rows, schema=self.schema)
+            df = local_df(self.spark, rows, self.schema)
             new_cursor = max(r[self.id_field] for r in rows)
             if new_cursor <= cursor:
                 # a server that ignores lastId (or a non-increasing id

@@ -56,6 +56,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_migrate_api_spark.localdf import local_df
+
 RECORD_SCHEMA = "offset bigint, key string, value string, ts timestamp"
 
 
@@ -102,8 +104,8 @@ class OffsetLogTopic:
         a DataFrame carries no producer order, so the tiebreak makes
         appends deterministic. Returns the new end offsets."""
         ends = self.end_offsets()
-        base = self.spark.createDataFrame(
-            [(p, ends[p]) for p in range(self.n_partitions)], "p int, base bigint"
+        base = local_df(
+            self.spark, [(p, ends[p]) for p in range(self.n_partitions)], "p int, base bigint"
         )
         from pyspark.sql import Window
 

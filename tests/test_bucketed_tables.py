@@ -397,3 +397,26 @@ def test_recovery_with_glob_metachars_in_path(spark, tmp_path):
     assert t.exists()  # _recover restored through the escaped glob
     assert os.path.isdir(path)
     assert not os.path.exists(path + ".old-cafebabe")
+
+
+def _files_per_bucket(path):
+    return {
+        os.path.basename(b): len(glob.glob(os.path.join(b, "*.parquet")))
+        for b in glob.glob(os.path.join(path, "_bucket=*"))
+    }
+
+
+def test_every_write_leaves_one_file_per_bucket(spark, table):
+    """Each bucket directory a write produces holds exactly one parquet
+    file, whatever the input's partitioning (``_rows`` spreads its rows
+    over every local slice, so an unrepartitioned write puts a file per
+    task in each bucket)."""
+    assert set(_files_per_bucket(table.path).values()) == {1}  # replace
+    table.replace_buckets(table.read_buckets([0, 1]), [0, 1])
+    assert set(_files_per_bucket(table.path).values()) == {1}
+    batch = _rows(spark, [(f"k{i}", -i) for i in range(0, 80, 3)])
+    upsert_by_key(table, batch, key="hn_code")
+    assert set(_files_per_bucket(table.path).values()) == {1}
+    assert delete_beyond_watermark(table, F.col("v") >= 50) > 0
+    assert set(_files_per_bucket(table.path).values()) == {1}
+    assert len(_files_per_bucket(table.path)) == 8
